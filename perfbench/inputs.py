@@ -1,4 +1,4 @@
-"""Benchmark inputs: a small TPC-H-shaped corpus written as parquet.
+"""Benchmark inputs: a TPC-H-shaped corpus written as parquet.
 
 The row contents are fixed (generated from a constant RNG seed), so every
 ground truth the output checks use holds for any benchmark seed. The
@@ -17,6 +17,7 @@ import datetime as dt
 import math
 import os
 import random
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -35,16 +36,31 @@ DOC_WORDS = ("scan column window order sort part agg value line key join merge "
              "table small data big customer row").split()
 LANGS = ["en"] * 4 + ["fr", "es", "zh", "de"] * 2
 EMBED_DIM = 64
-N_PARTS = 200
-N_SUPPLIERS = 10
-N_DOCS = 500
 # "customer#" — the typo stays inside this prefix: a typo in the digits
 # could turn one customer's name into another customer's label
 PREFIX = "customer#"
 
 
-def _tables(n_customers: int, orders_per_customer: int) -> dict[str, pa.Table]:
+def sizes(sf: float) -> dict[str, int]:
+    """Row counts at TPC-H scale factor ``sf``, as in the engine's testdata
+    (sf0.001: 150 customers, 1,500 orders, 6,000 line items; sf0.1: 15,000
+    customers, 150,000 orders, 600,000 line items)."""
+    return {
+        "customers": round(150_000 * sf),
+        "orders_per_customer": 10,
+        "parts": max(200, round(200_000 * sf)),
+        "suppliers": max(10, round(10_000 * sf)),
+        "events": round(1_000_000 * sf),
+        "docs": max(500, round(50_000 * sf)),
+        "vectors": max(500, round(20_000 * sf)),
+    }
+
+
+def _tables(sf: float) -> dict[str, pa.Table]:
     rng = random.Random(CONTENT_SEED)
+    size = sizes(sf)
+    n_customers, orders_per_customer = size["customers"], size["orders_per_customer"]
+    n_parts, n_suppliers, n_docs = size["parts"], size["suppliers"], size["docs"]
     region = pa.table({
         "r_regionkey": pa.array(range(len(REGIONS)), pa.int32()),
         "r_name": REGIONS,
@@ -83,9 +99,9 @@ def _tables(n_customers: int, orders_per_customer: int) -> dict[str, pa.Table]:
         "l_orderkey": pa.array(
             sorted(rng.randrange(n_orders) for _ in range(n_lines)), pa.int64()),
         "l_partkey": pa.array(
-            [rng.randrange(N_PARTS) for _ in range(n_lines)], pa.int64()),
+            [rng.randrange(n_parts) for _ in range(n_lines)], pa.int64()),
         "l_suppkey": pa.array(
-            [rng.randrange(N_SUPPLIERS) for _ in range(n_lines)], pa.int64()),
+            [rng.randrange(n_suppliers) for _ in range(n_lines)], pa.int64()),
         "l_linenumber": pa.array(
             [rng.randint(1, 7) for _ in range(n_lines)], pa.int32()),
         "l_quantity": [float(rng.randint(1, 50)) for _ in range(n_lines)],
@@ -100,24 +116,24 @@ def _tables(n_customers: int, orders_per_customer: int) -> dict[str, pa.Table]:
              for _ in range(n_lines)], pa.timestamp("us")),
     })
     part = pa.table({
-        "p_partkey": pa.array(range(N_PARTS), pa.int64()),
+        "p_partkey": pa.array(range(n_parts), pa.int64()),
         "p_name": [f"{rng.choice(PART_WORDS[0])} {rng.choice(PART_WORDS[1])}"
-                   for _ in range(N_PARTS)],
-        "p_brand": [f"Brand#{rng.randint(1, 25)}" for _ in range(N_PARTS)],
-        "p_type": [rng.choice(PART_TYPES) for _ in range(N_PARTS)],
-        "p_size": pa.array([rng.randint(1, 50) for _ in range(N_PARTS)],
+                   for _ in range(n_parts)],
+        "p_brand": [f"Brand#{rng.randint(1, 25)}" for _ in range(n_parts)],
+        "p_type": [rng.choice(PART_TYPES) for _ in range(n_parts)],
+        "p_size": pa.array([rng.randint(1, 50) for _ in range(n_parts)],
                            pa.int32()),
-        "p_retailprice": [round(900.0 + 0.1 * k, 2) for k in range(N_PARTS)],
+        "p_retailprice": [round(900.0 + 0.1 * k, 2) for k in range(n_parts)],
     })
     supplier = pa.table({
-        "s_suppkey": pa.array(range(N_SUPPLIERS), pa.int64()),
-        "s_name": [f"Supplier#{k:09d}" for k in range(N_SUPPLIERS)],
+        "s_suppkey": pa.array(range(n_suppliers), pa.int64()),
+        "s_name": [f"Supplier#{k:09d}" for k in range(n_suppliers)],
         "s_nationkey": pa.array(
-            [rng.randrange(N_NATIONS) for _ in range(N_SUPPLIERS)], pa.int32()),
+            [rng.randrange(N_NATIONS) for _ in range(n_suppliers)], pa.int32()),
         "s_acctbal": [round(rng.uniform(-999.99, 9999.99), 2)
-                      for _ in range(N_SUPPLIERS)],
+                      for _ in range(n_suppliers)],
     })
-    n_events = n_customers * 6
+    n_events = size["events"]
     t0 = dt.datetime(2024, 1, 1)
     events = pa.table({
         "event_id": pa.array(range(n_events), pa.int64()),
@@ -133,27 +149,27 @@ def _tables(n_customers: int, orders_per_customer: int) -> dict[str, pa.Table]:
         "props": [f'{{"k": {rng.randrange(100)}}}' for _ in range(n_events)],
     })
     texts = []
-    for k in range(N_DOCS):
+    for k in range(n_docs):
         words = [rng.choice(DOC_WORDS) for _ in range(rng.randint(8, 90))]
         if k % 17 == 0:
             words.append("dup")
         texts.append(" ".join(words))
     documents = pa.table({
-        "doc_id": pa.array(range(N_DOCS), pa.int64()),
+        "doc_id": pa.array(range(n_docs), pa.int64()),
         "text": texts,
-        "lang": [rng.choice(LANGS) for _ in range(N_DOCS)],
-        "source": [f"src{rng.randrange(20)}" for _ in range(N_DOCS)],
+        "lang": [rng.choice(LANGS) for _ in range(n_docs)],
+        "source": [f"src{rng.randrange(20)}" for _ in range(n_docs)],
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     })
     vectors = []
-    for _ in range(N_DOCS):
+    for _ in range(size["vectors"]):
         v = [rng.gauss(0.0, 1.0) for _ in range(EMBED_DIM)]
         norm = math.sqrt(sum(x * x for x in v))
         vectors.append([x / norm for x in v])
     embeddings = pa.table({
-        "vec_id": pa.array(range(N_DOCS), pa.int64()),
+        "vec_id": pa.array(range(size["vectors"]), pa.int64()),
         "embedding": pa.array(vectors, pa.list_(pa.float32())),
-        "label": pa.array([rng.randrange(10) for _ in range(N_DOCS)],
+        "label": pa.array([rng.randrange(10) for _ in vectors],
                           pa.int32()),
     })
     return {"region": region, "nation": nation, "customer": customer,
@@ -162,14 +178,30 @@ def _tables(n_customers: int, orders_per_customer: int) -> dict[str, pa.Table]:
             "embeddings": embeddings}
 
 
-def write_corpus(
-    out_dir: str, n_customers: int, orders_per_customer: int, seed: int
-) -> str:
-    """Write the corpus as one parquet file per table under ``out_dir``,
-    each table's rows in a seed-dependent order. Returns ``out_dir``."""
+def _contents(sf: float, cache_dir: str) -> dict[str, pa.Table]:
+    """The corpus tables at ``sf``, read from ``cache_dir`` when an earlier
+    run wrote them there (they do not depend on the benchmark seed)."""
+    cached = os.path.join(cache_dir, f"sf{sf}")
+    if not os.path.isdir(cached):
+        tmp = f"{cached}.{os.getpid()}"
+        os.makedirs(tmp)
+        for name, table in _tables(sf).items():
+            pq.write_table(table, os.path.join(tmp, f"{name}.parquet"))
+        try:
+            os.rename(tmp, cached)
+        except OSError:  # another run cached it first
+            shutil.rmtree(tmp, ignore_errors=True)
+    return {f.removesuffix(".parquet"): pq.read_table(os.path.join(cached, f))
+            for f in sorted(os.listdir(cached))}
+
+
+def write_corpus(out_dir: str, sf: float, seed: int, cache_dir: str) -> str:
+    """Write the corpus at scale factor ``sf`` as one parquet file per table
+    under ``out_dir``, each table's rows in a seed-dependent order. Returns
+    ``out_dir``."""
     os.makedirs(out_dir, exist_ok=True)
     rng = random.Random(seed)
-    for name, table in _tables(n_customers, orders_per_customer).items():
+    for name, table in _contents(sf, cache_dir).items():
         order = list(range(table.num_rows))
         rng.shuffle(order)
         pq.write_table(table.take(order), os.path.join(out_dir, f"{name}.parquet"))

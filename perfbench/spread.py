@@ -2,7 +2,7 @@
 spread (interquartile range over median), the steadiness test the
 benchmark's bounds are judged by.
 
-    python3 perfbench/spread.py --workload lookup_fuzzy --seeds 1-10 [--trace 1]
+    python3 perfbench/spread.py --workload kg_front --seeds 1-10 [--trace 1]
 
 Each run is a separate ``perfbench/run.py`` process, one after another.
 """
@@ -47,6 +47,9 @@ def main() -> int:
             print(proc.stderr[-2000:], file=sys.stderr)
             return 1
         result = json.loads(lines[-1])
+        for line in proc.stderr.replace("\r", "\n").splitlines():
+            if line.startswith(("setup", "iteration")):
+                print(f"  {line}", file=sys.stderr)
         print(f"seed {seed}: {time.time() - t0:.0f} s wall, "
               f"{result['attempted'] - result['failed']}/{result['attempted']} ok, "
               + " ".join(f"{k}={m['value']:.4g}"

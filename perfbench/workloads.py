@@ -2,66 +2,72 @@
 one iteration runs, and the check each operation's output must pass.
 
 Every workload calls the engine only through its public functions:
-``kg_build.with_label_norm``, ``session.tune_for_input_size``,
-``lookup.token_idf``, ``lookup.candidate_pairs``,
-``lookup.score_candidates``, ``functions.similarity.fuzzy_pexact_batch``
-and the ``__spark_entry__`` query registry with its DuckDB oracles.
+``flagship.synth_kg``, ``flagship.synth_source``, ``kg_build.degrees``,
+``PipelineRun.run``, ``session.tune_for_input_size``, ``lookup.token_idf``,
+``lookup.candidate_pairs``, ``lookup.score_candidates``,
+``functions.similarity.fuzzy_pexact_batch`` and the ``__spark_entry__``
+query registry with its DuckDB oracles.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import statistics
 import time
 
+from scripts.check_oracles import value_hash
+
 from . import inputs
 
-CUSTOMERS = 150  # the corpus: 150 customers, 1,500 orders, 6,000 line items
 KERNEL_SAMPLE = 20000
 ENTITY_BASE = 3000000  # synth_kg's entity id offset for customers
+# the pipeline's Spark job groups (session.job_group tags) -> layer names
+PIPELINE_GROUPS = {
+    "stage_prep": "preprocessing",
+    "stage_lookup": "lookup",
+    "annot_build_inputs": "annotation.build_inputs",
+    "annot_pass1": "annotation.pass1",
+    "annot_pass2": "annotation.pass2",
+    "annot_pass3": "annotation.pass3",
+    "annot_pass4": "annotation.pass4",
+    "stage_materialize": "materialize",
+    "ungrouped": "pipeline.ungrouped",
+}
 
 
 class Op:
-    """One timed operation: ``run()`` returns the output ``check`` judges."""
+    """One timed operation: ``run()`` returns the output ``check`` judges.
+    The benchmark runs it under the Spark job group ``group``; an op whose
+    group is None tags its own jobs (the pipeline does)."""
 
-    def __init__(self, name, layer, run, check):
-        self.name, self.layer, self.run, self.check = name, layer, run, check
-
-
-def build_label_index(spark, corpus_dir: str, span) -> dict:
-    """The KG index the lookup reads: one LABEL row per customer, as
-    ``flagship.synth_kg`` derives it, normalized by ``kg_build``, and the
-    lookup's token IDF table, both materialized."""
-    from pyspark.sql import functions as F
-
-    from table_annotation_spark.operators import lookup as lk
-    from table_annotation_spark.session import ckpt
-    from table_annotation_spark.sources import kg_build
-
-    with span("kg_build.with_label_norm"):
-        cust = spark.read.parquet(os.path.join(corpus_dir, "customer.parquet"))
-        labels = ckpt(kg_build.with_label_norm(cust.select(
-            F.concat(F.lit("Q"), (F.col("c_custkey") + ENTITY_BASE)
-                     .cast("string")).alias("entity"),
-            F.col("c_name").alias("label"),
-            F.length("c_name").alias("length"),
-            F.lit("LABEL").alias("origin"),
-            F.lit(0.1).alias("pr"),
-        )), eager=True)
-    with span("lookup.token_idf"):
-        idf = ckpt(lk.token_idf(labels), eager=True)
-    return {"labels": labels, "idf": idf}
+    def __init__(self, name, group, run, check):
+        self.name, self.group, self.run, self.check = name, group, run, check
 
 
 def _entity(custkey: int) -> str:
     return f"Q{custkey + ENTITY_BASE}"
 
 
+def _oracle_hashes(corpus_dir: str, sql: dict[str, str]) -> dict[str, str]:
+    """Value hash of each DuckDB query over the corpus' parquet files."""
+    import duckdb
+
+    con = duckdb.connect()
+    for f in sorted(os.listdir(corpus_dir)):
+        con.execute(f"CREATE VIEW {f.removesuffix('.parquet')} AS SELECT * "
+                    f"FROM '{os.path.join(corpus_dir, f)}'")
+    out = {}
+    for name, q in sql.items():
+        cur = con.execute(q)
+        out[name] = value_hash(cur.fetchall(), [d[0] for d in cur.description])
+    con.close()
+    return out
+
+
 class FuzzyLookup:
     """One typo'd mention per customer resolved against the KG label index
-    through gram blocking and the fuzzy kernel; every mention's top-1 must
-    be its own customer."""
+    through gram blocking and the fuzzy kernel, with ``kg_lookup_fuzzy``'s
+    parameters; every mention's top-1 must be its own customer."""
 
     def __init__(self, n_customers: int, seed: int):
         self.mentions = inputs.typo_mentions(n_customers, seed)
@@ -70,7 +76,7 @@ class FuzzyLookup:
     def op(self, spark, index: dict, span) -> Op:
         frame = spark.createDataFrame(
             [(m,) for m, _ in self.mentions], "mention_norm string")
-        return Op("lookup_fuzzy", "lookup",
+        return Op("lookup_fuzzy", "lookup.fuzzy",
                   lambda: self._top1(frame, index, span), self._check)
 
     @staticmethod
@@ -108,9 +114,9 @@ class FuzzyLookup:
         self.top1 = sum(got.get(m) == _entity(k) for m, k in self.mentions)
         return self.top1 == len(self.mentions) == len(got)
 
-    def layer_metrics(self, spark, index: dict) -> dict:
-        """Traced run only, outside every timed span: lookup work counts and
-        the fuzzy-kernel micro-measurement on a fixed sample of pairs."""
+    def layer_metrics(self, spark, index: dict) -> tuple[dict, list[bool]]:
+        """Traced run only, after the timed iterations: lookup work counts
+        and the fuzzy-kernel micro-measurement on a fixed sample of pairs."""
         import numpy as np
 
         from table_annotation_spark.functions.similarity import (
@@ -139,88 +145,123 @@ class FuzzyLookup:
         )
         n = len(self.mentions)
         return {
-            "lookup.mentions": n,
-            "lookup.pairs": n_pairs,
-            "lookup.pairs_per_mention": n_pairs / n,
-            "lookup.kept_ratio": self.kept / max(n_pairs, 1),
-            "lookup.top1_ratio": self.top1 / n,
-            "similarity.kernel_us_per_pair":
-                statistics.median(runs) / max(len(sample), 1) * 1e6,
-            "similarity.kernel_pairs": len(sample),
+            "lookup.mentions": (n, "count"),
+            "lookup.pairs": (n_pairs, "count"),
+            "lookup.pairs_per_mention": (n_pairs / n, "count"),
+            "lookup.kept_ratio": (self.kept / max(n_pairs, 1), "ratio"),
+            "lookup.top1_ratio": (self.top1 / n, "ratio"),
+            "similarity.kernel_us_per_pair": (
+                statistics.median(runs) / max(len(sample), 1) * 1e6, "us"),
+            "similarity.kernel_pairs": (len(sample), "count"),
         }, [bit_equal]
 
 
-def value_hash(rows, cols) -> str:
-    """Order-insensitive hash of a result, columns sorted by name, cells
-    normalized (floats to 6 significant digits) — the comparison the
-    repository's oracle check uses."""
-    def norm(v):
-        if v is None:
-            return ""
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if isinstance(v, float):
-            return f"{v:.6g}"
-        return str(v)
+class Flagship:
+    """The KG-construction pipeline (``PipelineRun.run``) over the customer
+    and nation tables as ``kg_flagship_triples`` runs it (no order tables,
+    k=3, the 3+6-gram ladder), against the KG index built at set-up. Its
+    distinct entity and literal triples must equal the DuckDB oracles
+    ``FLAGSHIP_TRIPLES_SQL`` and ``FLAGSHIP_LITERALS_SQL``. One run takes
+    45-77 s on a 4-core host, at 30 customers as at 150 (about 100 Spark
+    jobs), so it runs once, in the traced run only."""
 
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("\x1f".join(norm(r[i]) for i in order) for r in rows)
-    h = hashlib.sha256()
-    for ln in lines:
-        h.update(ln.encode())
-        h.update(b"\n")
-    return h.hexdigest()
+    SPAN = "PipelineRun.run"
+    ORACLES = ("FLAGSHIP_TRIPLES_SQL", "FLAGSHIP_LITERALS_SQL")
+
+    def __init__(self, corpus_dir: str):
+        from table_annotation_spark.operators import kg_queries
+
+        self.corpus_dir = corpus_dir
+        self.expected = _oracle_hashes(
+            corpus_dir, {k: getattr(kg_queries, k) for k in self.ORACLES})
+
+    def layer_metrics(self, spark, index: dict, span) -> tuple[dict, list[bool]]:
+        """Run the pipeline once inside the span ``SPAN``; check its triples
+        and report the engine's own stage timings (``PipelineRun.metrics``)
+        and the row counts of its stage outputs."""
+        from table_annotation_spark.flagship import synth_source
+        from table_annotation_spark.plans.pipeline import PipelineRun
+
+        run = PipelineRun(
+            spark=spark, labels=index["labels"], edges=index["edges"],
+            degrees=index["degrees"], k=3, max_gram_df=64,
+            multi_resolution=True, max_candidates_per_mention=200,
+        )
+        with span(self.SPAN):
+            out = run.run(synth_source(spark, self.corpus_dir, include_orders=False))
+            # the triples frame is lazy past the engine's last checkpoint:
+            # its final projection and decode run in this (ungrouped) collect
+            rows = out["triples"].select("subj", "pred", "obj", "obj_kind").collect()
+        got = {
+            kind: value_hash(
+                {(r["subj"], r["pred"], r["obj"]) for r in rows
+                 if r["obj_kind"] == kind}, ["subj", "pred", "obj"])
+            for kind in ("entity", "literal")
+        }
+        ok = (got["entity"] == self.expected["FLAGSHIP_TRIPLES_SQL"]
+              and got["literal"] == self.expected["FLAGSHIP_LITERALS_SQL"])
+        metrics = {
+            name: (run.metrics.get(key, 0.0), "s") for key, name in (
+                ("prep_sec", "preprocessing.stage_s"),
+                ("lookup_sec", "lookup.stage_s"),
+                ("annotate_sec", "annotation.stage_s"),
+                ("build_inputs", "annotation.build_inputs_s"),
+                ("pass1", "annotation.pass1_s"),
+                ("pass2", "annotation.pass2_s"),
+                ("pass3", "annotation.pass3_s"),
+                ("pass4", "annotation.pass4_s"),
+                ("materialize_sec", "materialize.stage_s"))
+        }
+        for key, name in (("prep", "preprocessing.cells"),
+                          ("cea", "annotation.cea_rows"),
+                          ("cta", "annotation.cta_rows"),
+                          ("cpa", "annotation.cpa_rows")):
+            metrics[name] = (out[key].count(), "count")
+        metrics["materialize.triples"] = (len(rows), "count")
+        return metrics, [ok]
 
 
 class OpsSuite:
-    """Operator queries, one per operator module, each collected in turn
+    """Operator queries, one per operator family, each collected in turn
     and compared with its DuckDB oracle."""
 
     name = "ops_suite"
-    iteration_s = 5.0  # nominal warm iteration on a 4-core host
+    sf = 0.03
+    iteration_s = 10.0  # nominal warm iteration on a 4-core host
     QUERIES = {
         "rel_topk_window": "ops.relational",
         "text_token_count": "ops.text",
         "dedup_exact": "ops.dedup",
         "sim_ann_lsh": "ops.similarity",
-        "sess_gap_sessions": "ops.sessions",
+        "graph_pagerank": "ops.graph",
+        "sess_funnel": "ops.sessions",
         "multimodal_decode_real": "ops.multimodal",
+        "kg_typing_ner": "ops.kg_queries",
     }
 
     def __init__(self, corpus_dir: str, seed: int):
-        import duckdb
-
         import __spark_entry__ as entry
 
         self.corpus_dir = corpus_dir
-        con = duckdb.connect()
-        tables = [f.removesuffix(".parquet") for f in sorted(os.listdir(corpus_dir))]
-        for t in tables:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"'{os.path.join(corpus_dir, t)}.parquet'")
-        self.rows = sum(con.execute(f"SELECT count(*) FROM {t}").fetchone()[0]
-                        for t in tables)
         self.queries = entry.queries()
         oracles = entry.oracle_sql()
-        self.expected = {}
-        for name in self.QUERIES:
-            cur = con.execute(oracles[name])
-            cols = [d[0] for d in cur.description]
-            self.expected[name] = value_hash(cur.fetchall(), cols)
-        con.close()
-        self.items = len(self.QUERIES)
+        self.expected = _oracle_hashes(
+            corpus_dir, {name: oracles[name] for name in self.QUERIES})
 
     def build_index(self, spark, span) -> dict:
         """Size the session for the corpus, as the pipeline does; the
         queries read their parquet inputs directly."""
         from table_annotation_spark.session import tune_for_input_size
 
-        tune_for_input_size(spark, self.rows)
+        size = inputs.sizes(self.sf)
+        orders = size["customers"] * size["orders_per_customer"]
+        # customers, orders, their four line items each, events
+        tune_for_input_size(spark, size["customers"] + 5 * orders + size["events"])
         return {}
 
     def ops(self, spark, index: dict, span) -> list[Op]:
         out = []
-        for name, layer in self.QUERIES.items():
+        for name, group in self.QUERIES.items():
             fn = self.queries[name]
 
             def run(fn=fn):
@@ -229,44 +270,62 @@ class OpsSuite:
                     return df.columns, df.collect()
 
             out.append(Op(
-                name, layer, run,
+                name, group, run,
                 lambda res, name=name: value_hash(res[1], res[0])
                 == self.expected[name],
             ))
         return out
 
-    def layer_metrics(self, spark, index: dict):
+    def layer_metrics(self, spark, index: dict, span):
         return {}, []
 
 
-class KgFront(OpsSuite):
-    """The KG-construction front end as separate calls: fuzzy entity lookup
-    of typo'd customer names, embedded-table extraction plus
-    preprocessing, and cell typing with NER."""
+class KgFront:
+    """The KG-construction engine on a small corpus. Timed: fuzzy entity
+    lookup of typo'd customer names against the KG label index. Traced run
+    only: the lookup's work counts, the fuzzy-kernel micro-measurement and
+    one run of the flagship pipeline."""
 
     name = "kg_front"
-    iteration_s = 7.0  # nominal warm iteration on a 4-core host
-    QUERIES = {
-        "kg_cells_multitable": "preprocessing",
-        "kg_typing_ner": "typing",
-    }
+    sf = 0.001
+    iteration_s = 6.5  # nominal warm iteration on a 4-core host
 
     def __init__(self, corpus_dir: str, seed: int):
-        super().__init__(corpus_dir, seed)
-        self.lookup = FuzzyLookup(CUSTOMERS, seed)
-        self.items += 1
+        self.corpus_dir = corpus_dir
+        self.lookup = FuzzyLookup(inputs.sizes(self.sf)["customers"], seed)
+        self.flagship = Flagship(corpus_dir)
 
     def build_index(self, spark, span) -> dict:
-        super().build_index(spark, span)
-        return build_label_index(spark, self.corpus_dir, span)
+        """The KG index, as ``run_flagship`` builds it: session sizing,
+        ``synth_kg``'s labels and edges and ``kg_build.degrees`` over the
+        edges, all materialized, plus the lookup's token IDF table."""
+        from table_annotation_spark.flagship import synth_kg
+        from table_annotation_spark.operators import lookup as lk
+        from table_annotation_spark.session import ckpt, tune_for_input_size
+        from table_annotation_spark.sources import kg_build
+
+        tune_for_input_size(spark, inputs.sizes(self.sf)["customers"] * 11)
+        with span("flagship.synth_kg"):
+            labels, edges, _ = synth_kg(spark, self.corpus_dir)
+            labels = ckpt(labels, eager=True)
+            edges = ckpt(edges, eager=True)
+        with span("kg_build.degrees"):
+            degrees = ckpt(kg_build.degrees(edges), eager=True)
+        with span("lookup.token_idf"):
+            idf = ckpt(lk.token_idf(labels), eager=True)
+        return {"labels": labels, "edges": edges, "degrees": degrees, "idf": idf}
 
     def ops(self, spark, index: dict, span) -> list[Op]:
-        return [self.lookup.op(spark, index, span),
-                *super().ops(spark, index, span)]
+        return [self.lookup.op(spark, index, span)]
 
-    def layer_metrics(self, spark, index: dict):
-        return self.lookup.layer_metrics(spark, index)
+    def layer_metrics(self, spark, index: dict, span):
+        metrics, checks = self.lookup.layer_metrics(spark, index)
+        more, ok = self.flagship.layer_metrics(spark, index, span)
+        metrics.update(more)
+        return metrics, checks + ok
 
 
 WORKLOADS = {w.name: w for w in (KgFront, OpsSuite)}
-LAYERS = ["lookup", *KgFront.QUERIES.values(), *OpsSuite.QUERIES.values()]
+# the Spark job groups of the timed operations, whose per-layer metrics the
+# traced run reports per iteration
+GROUPS = ["lookup.fuzzy", *OpsSuite.QUERIES.values()]
