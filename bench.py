@@ -121,11 +121,6 @@ def run_bench(sf_dir: str, cpus: str) -> dict:
 
 
 def main() -> None:
-    # local-mode executors live in the driver JVM; the replicated scaling legs
-    # pin ~20 localCheckpointed intermediates (unevictable blocks), so give
-    # the JVM headroom up front (host has 128 GiB; -Xmx is fixed at first
-    # session launch and cannot be raised later in the same process)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([\d.]+)", sf_dir)

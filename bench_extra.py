@@ -47,7 +47,6 @@ def _session(cpus: str):
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     reps = int(os.environ.get("SPARK_GRAFT_REPS", "1"))

@@ -17,7 +17,6 @@ def main():
     rep = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     cores = sys.argv[2] if len(sys.argv) > 2 else "32"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
     from table_annotation_spark.flagship import run_flagship
     from table_annotation_spark.session import get_spark

@@ -297,8 +297,9 @@ def _popcount64(v):
 
 def fuzzy_pexact_batch(mentions, labels, min_fuzzy: float = 0.70):
     """Batch (mixed_fuzzy_score, is_partial_exact) — the vectorized twin of
-    ``lookup_fuzzy_pexact`` for the lookup UDF (guide-§4.2 shape: the Python
-    boundary hands whole Arrow batches to NumPy instead of looping rows).
+    ``lookup_fuzzy_pexact`` for the lookup's Arrow pass (guide-§4.2 shape:
+    the Python boundary hands whole Arrow batches to NumPy instead of looping
+    rows).
 
     Rows where BOTH sides are non-empty single-token ASCII strings ≤63 chars
     (the dominant lookup shape) run the bit-parallel LCS on uint64 lanes:
@@ -440,8 +441,8 @@ def fuzzy_pexact_batch(mentions, labels, min_fuzzy: float = 0.70):
 
 
 def lookup_fuzzy_pexact(mention: str, label: str, min_fuzzy: float = 0.70):
-    """Fused (mixed_fuzzy_score, is_partial_exact) for the lookup UDF —
-    inputs MUST already be lookup-normalized (lowercase, single-space,
+    """Fused (mixed_fuzzy_score, is_partial_exact) for the lookup's scoring
+    pass — inputs MUST already be lookup-normalized (lowercase, single-space,
     trimmed; operators/lookup.py ``norm_col``), which collapses the
     reference's 0.9·lower + 0.1·raw mix to the plain scores.
 

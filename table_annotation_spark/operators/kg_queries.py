@@ -126,8 +126,8 @@ ORDER BY table_id, row_idx, col_idx
 
 
 def lookup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The real lookup scoring path (exact-norm blocking, fuzzy UDF, adaptive
-    threshold, origin/PR/lexical scoring, top-K window) over customer-name
+    """The real lookup scoring path (exact-norm blocking, Arrow scoring pass,
+    adaptive threshold, origin/PR/lexical scoring, top-K) over customer-name
     mentions vs the synthesized label index. Ground truth: the identity
     mapping (each customer name resolves to its own entity)."""
     labels, _, _ = synth_kg(spark, sf_dir)

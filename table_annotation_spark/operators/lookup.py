@@ -15,18 +15,27 @@ join between the distinct mention set and ``kg_labels``:
    "USA" cannot explode the gram join (explicit skew control; AQE skew-join
    splitting handles residual imbalance).
 4. **Length band** (es_lookup.py:207-210): 0.25·len ≤ label_len ≤ 4·len.
-5. **Fuzzy re-score** (L5, es_lookup.py:123-174): Arrow pandas UDF over the
-   surviving pairs (mixed indel/token_sort/token_set + partial-exact bypass).
+
+Steps 5–8, the reference's per-mention re-scoring loop (es_lookup.py:123-217),
+are ONE ``mapInArrow`` pass over the pairs partitioned by mention, scoring each
+partition with NumPy group-wise operations:
+
+5. **Fuzzy re-score** (L5, es_lookup.py:123-174): ``fuzzy_pexact_batch``
+   (mixed indel/token_sort/token_set + partial-exact bypass) × origin factor.
 6. **Adaptive threshold** (L6): fuzzy ≥ max(0.70, best−0.25) per mention.
-7. **Final score** (L7): 0.7·fuzzy·origin + 0.1·PR-term + 0.2·lexical. The ES
-   BM25 component is replaced by a deterministic IDF-weighted token-overlap
-   score (documented deviation; SURVEY §2.4 L7).
-8. **Top-K per mention** (K=20) via window.
+7. **Final score** (L7): 0.7·fuzzy·origin + 0.1·PR-term + 0.2·lexical of each
+   entity's best label. The ES BM25 component is replaced by a deterministic
+   IDF-weighted token-overlap score (documented deviation; SURVEY §2.4 L7).
+8. **Top-K per mention** (K=20), ties broken on entity.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from functools import partial
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -127,24 +136,6 @@ def _grams(col, n: int = 3):
     )
 
 
-def _fuzzy_pexact_udf():
-    """ONE Arrow pass computing (fuzzy, pexact) fused, batch-vectorized —
-    ``fuzzy_pexact_batch`` runs the bit-parallel LCS as NumPy uint64 lane
-    math over the whole Arrow batch for the dominant single-token-ASCII
-    shape (bit-equal to the scalar kernel, which still handles multi-token/
-    long/non-ASCII rows), and a single struct UDF halves the Arrow
-    serialization vs two UDFs."""
-
-    @F.pandas_udf("fuzzy double, pexact boolean")
-    def fp(mention: pd.Series, label: pd.Series) -> pd.DataFrame:
-        fuzzies, pexacts = fuzzy_pexact_batch(
-            mention.to_numpy(), label.to_numpy(), MIN_FUZZY
-        )
-        return pd.DataFrame({"fuzzy": fuzzies, "pexact": pexacts})
-
-    return fp
-
-
 def token_idf(labels: DataFrame) -> DataFrame:
     """(token, idf) from kg_labels — the deterministic BM25 stand-in corpus
     statistic. Computed once per KG build, broadcast at use."""
@@ -180,17 +171,13 @@ def candidate_pairs(
     """
     m = mentions_distinct.select("mention_norm").distinct()
 
-    # Dictionary-encode label rows (guide §8: shuffle a lightweight proxy,
-    # attach the payload once): the shared-key count, top-N window and pair
-    # dedupe below used to group/sort/shuffle the FULL 8-column string tuple
-    # three times (measured 13 of the 15 s of this stage at sf0.1) — now
-    # every heavy exchange carries (mention_norm, _lid) and the label
-    # attributes are joined back exactly once onto the pruned pair set.
-    # _lid = rank over the full attribute tuple, so the top-N tie-break
-    # below (_lid asc) refines the previous (entity, label_norm) order
-    # deterministically. The single-task ordering window is bounded by the
-    # label-index size (same posture as the pipeline's table_id dictionary);
-    # the lazy checkpoint pins one id assignment for all consumers.
+    # Dictionary-encode label rows (guide §8): every heavy exchange below
+    # carries (mention_norm, _lid), and the label attributes are joined back
+    # once onto the pruned pairs (shuffling the full string tuple cost 13 of
+    # this stage's 15 s at sf0.1). _lid ranks the full attribute tuple, so
+    # the top-N tie-break (_lid asc) is deterministic; the single-task window
+    # is bounded by the label-index size, and the lazy checkpoint pins one id
+    # assignment for all consumers.
     lbl = _sckpt(
         labels.select("entity", "label", "label_norm", "length", "origin", "pr")
         .distinct()
@@ -226,12 +213,7 @@ def candidate_pairs(
             F.explode(_grams(F.col("label_norm"), n=n)).alias("gram"),
         )
         if cap is not None:
-            hot = (
-                lg.groupBy("gram")
-                .count()
-                .where(F.col("count") > cap)
-                .select("gram")
-            )
+            hot = lg.groupBy("gram").count().where(F.col("count") > cap).select("gram")
             lg = lg.join(bcast(hot), "gram", "left_anti")
         grammed_parts.append(
             mg.join(lg, "gram")
@@ -245,15 +227,12 @@ def candidate_pairs(
     for part in grammed_parts[1:]:
         grammed = grammed.unionByName(part)
     if max_candidates_per_mention is not None:
-        # count-based candidate pruning (PPJoin-style): rank labels per
-        # mention by how many blocking keys they share — JVM-side — and keep
-        # the top N BEFORE the Python fuzzy kernel sees a single pair. The
-        # true match shares the most keys by construction; junk candidates
-        # admitted through one mid-frequency gram drop out here instead of
-        # burning UDF time. Exact-path hits are never pruned.
-        # One upfront exchange on mention_norm serves BOTH the count groupBy
-        # (clustering on a key subset is satisfied) and the ranking window —
-        # previously each ran its own full-width exchange.
+        # count-based candidate pruning (PPJoin-style), JVM-side: keep each
+        # mention's top N labels by shared blocking keys before the fuzzy
+        # kernel sees a pair. The true match shares the most keys; junk
+        # admitted through one mid-frequency gram drops out. Exact-path hits
+        # are never pruned. One exchange on mention_norm serves both the
+        # count groupBy and the ranking window.
         counted = (
             grammed.repartition("mention_norm")
             .groupBy("mention_norm", "_lid")
@@ -275,121 +254,137 @@ def candidate_pairs(
     )
 
 
-def score_candidates(
-    pairs: DataFrame,
-    idf: DataFrame,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Fuzzy re-score → adaptive threshold → origin factor → per-entity max →
-    final L7 score → top-K. Returns (mention_norm, entity, best_label, score).
-
-    The UDF-scored pair set feeds four downstream branches (threshold window,
-    lexical join, per-entity max, final window) — materialize it once so the
-    blocking join + Python scoring don't recompute per branch."""
-    fp = _fuzzy_pexact_udf()
-
-    # the reference multiplies the origin factor in BEFORE the adaptive
-    # threshold (es_lookup.py:156-187: ratio *= factor, then max_ratio and
-    # ratio_threshold are computed over the factored ratios) — so both the
-    # per-mention best and the filter operate on fuzzy_w, not raw fuzzy.
-    origin_w = (
-        F.when(F.col("origin") == "MAIN_ALIAS", ORIGIN_WEIGHTS["MAIN_ALIAS"])
-        .when(F.col("origin") == "SUB_ALIAS", ORIGIN_WEIGHTS["SUB_ALIAS"])
-        .otherwise(ORIGIN_WEIGHTS["LABEL"])
+def score_candidates(pairs: DataFrame, idf: DataFrame, k: int = DEFAULT_K) -> DataFrame:
+    """Steps 5–8 → (mention_norm, entity, best_label, score), top ``k`` per
+    mention. The pairs are checkpointed (lazily) once partitioned by mention:
+    the mention-scale IDF frame and the Arrow pass both read that copy."""
+    spark = pairs.sparkSession
+    # ≤ 2 Python tasks per core, and no more than the input-sized shuffle
+    # partition count: every Python task has a fixed worker set-up cost
+    par = min(2 * spark.sparkContext.defaultParallelism,
+              int(spark.conf.get("spark.sql.shuffle.partitions")))
+    ck = _sckpt(pairs.select(
+        "mention_norm", "entity", "label", "label_norm", "origin", "pr",
+        # Spark's log2 keeps scores bit-equal to the SQL formulation; it is
+        # monotone, so the L7 denominator is the per-mention max of _lpr_den
+        F.log2(F.col("pr") + 1.0).alias("_lpr"),
+        F.log2(F.greatest("pr", F.lit(1e-9)) + 1.0).alias("_lpr_den"),
+    ).repartition(par, "mention_norm"))
+    # the IDFs of a mention's own tokens: all its lexical term can use
+    m_idf = (
+        ck.select("mention_norm").distinct()
+        .withColumn("token", F.explode(F.array_distinct(F.split("mention_norm", r"\s+"))))
+        .join(bcast(idf), "token")
+        .groupBy("mention_norm")
+        .agg(F.collect_list(F.struct("token", "idf")).alias("m_idf"))
     )
-    # the Python fuzzy kernel is the one genuinely CPU-bound stage in lookup:
-    # spread it over every core regardless of the (input-sized) global
-    # shuffle-partition setting — the blocking join can emit 100-1000× more
-    # pairs than it has input rows. Partitioning BY mention_norm also feeds
-    # the adaptive-threshold window below without another exchange.
-    par = pairs.sparkSession.sparkContext.defaultParallelism * 2
-    scored = (
-        pairs.repartition(par, "mention_norm")
-        .withColumn("_fp", fp("mention_norm", "label_norm"))
-        .withColumn("fuzzy", F.col("_fp.fuzzy"))
-        .withColumn("pexact", F.col("_fp.pexact"))
-        .drop("_fp")
-        .withColumn("fuzzy_w", F.col("fuzzy") * origin_w)
-        # pruned to what the downstream branches read (origin is folded into
-        # fuzzy_w; m_len/length/raw fuzzy die here) — every retained column
-        # is serialized into the checkpoint blocks at pair scale
-        .select(
-            "mention_norm", "entity", "label", "label_norm", "pr",
-            "pexact", "fuzzy_w",
-        )
-        # lazy: truncate the plan under the UDF without a blocking job; the
-        # four downstream branches share the one checkpointed RDD. The
-        # checkpoint preserves the mention_norm partitioning, which the
-        # threshold window, per-entity aggregate and final windows below all
-        # reuse — zero further exchanges of the pair-scale frame.
-        .transform(_sckpt)
+    return ck.join(bcast(m_idf), "mention_norm", "left").mapInArrow(
+        partial(_score_partition, k=k),
+        "mention_norm string, entity string, best_label string, score double",
     )
 
-    w_mention = Window.partitionBy("mention_norm")
-    scored = scored.withColumn("max_fuzzy", F.max("fuzzy_w").over(w_mention)).where(
-        (
-            F.col("fuzzy_w")
-            >= F.greatest(F.lit(MIN_FUZZY), F.col("max_fuzzy") - ADAPTIVE_MARGIN)
-        )
-        | F.col("pexact")
-    )
 
-    # lexical (BM25 stand-in): IDF-weighted token overlap, per-mention max-normalized
-    m_tok = scored.select("mention_norm", "entity", "label_norm").withColumn(
-        "token", F.explode(F.split("label_norm", r"\s+"))
-    )
-    mention_tok = m_tok.withColumn(
-        "m_tokens", F.split("mention_norm", r"\s+")
-    ).where(F.array_contains(F.col("m_tokens"), F.col("token")))
-    lex = (
-        mention_tok.join(bcast(idf), "token", "left")
-        .fillna({"idf": 0.0})
-        .groupBy("mention_norm", "entity", "label_norm")
-        .agg(F.sum("idf").alias("lex_raw"))
-    )
-    # size-gated broadcast: lex is bounded by pairs with ≥1 overlapping
-    # token (tiny on real corpora), and a sort-merge join here would
-    # re-partition the pair-scale frame by (mention, entity, label_norm),
-    # breaking the mention_norm partitioning chain that the aggregate and
-    # windows below reuse (large posture: AQE picks the strategy)
-    scored = scored.join(
-        bcast(lex), ["mention_norm", "entity", "label_norm"], "left"
-    ).fillna({"lex_raw": 0.0})
+def _codes(*arrays):
+    """Dense int64 id of each row's key tuple over the given arrays."""
+    keys = [pc.dictionary_encode(a, null_encoding="encode").indices.to_numpy() for a in arrays]
+    return np.unique(np.stack(keys), axis=1, return_inverse=True)[1].astype(np.int64)
 
-    # per-entity max over its labels (es_lookup.py:148-152): keep best label
-    per_entity = scored.groupBy("mention_norm", "entity").agg(
-        F.max(F.struct("fuzzy_w", "lex_raw", "pr", "label")).alias("best")
-    ).select(
-        "mention_norm",
-        "entity",
-        F.col("best.fuzzy_w").alias("fuzzy_w"),
-        F.col("best.lex_raw").alias("lex_raw"),
-        F.col("best.pr").alias("pr"),
-        F.col("best.label").alias("best_label"),
-    )
 
-    w = Window.partitionBy("mention_norm")
-    final = (
-        per_entity.withColumn("max_pr", F.max("pr").over(w))
-        .withColumn("max_lex", F.max("lex_raw").over(w))
-        .withColumn(
-            "score",
-            FUZZY_FACTOR * F.col("fuzzy_w")
-            + PR_FACTOR
-            * F.log2(F.col("pr") + 1.0)
-            / F.log2(F.greatest(F.col("max_pr"), F.lit(1e-9)) + 1.0)
-            + LEX_FACTOR
-            * F.when(F.col("max_lex") > 0, F.col("lex_raw") / F.col("max_lex")).otherwise(0.0),
-        )
-    )
-    w_rank = Window.partitionBy("mention_norm").orderBy(
-        F.desc("score"), F.asc("entity")
-    )
-    return (
-        final.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
-        .select("mention_norm", "entity", "best_label", "score")
-    )
+def _group_max(groups, values):
+    out = np.full(groups.max() + 1, -np.inf)
+    np.maximum.at(out, groups, values)
+    return out[groups]
+
+
+def _ranked(groups, table: pa.Table, sort_keys):
+    """Rows sorted by (group, *sort_keys), and each one's rank in its group."""
+    order = pc.sort_indices(table.append_column("_g", pa.array(groups)),
+                            [("_g", "ascending"), *sort_keys], null_placement="at_end").to_numpy()
+    g, pos = groups[order], np.arange(len(order))
+    starts = np.r_[True, g[1:] != g[:-1]]
+    return order, pos - np.maximum.accumulate(np.where(starts, pos, 0))
+
+
+def _lex_raw(g, label_norm, m_idf, n_dup):
+    """IDFs of each row's label tokens that are tokens of its mention
+    (``m_idf[g]``), summed as the JVM plan did: every occurrence counts, left
+    to right, and the sequence repeats once per surviving row sharing
+    (mention, entity, label_norm) — ``n_dup``."""
+    # Java's \s, as in Spark's split(): ASCII only, a no-break space stays in its token
+    lt = pc.split_pattern_regex(pc.cast(label_norm, pa.string()), r"[ \t\n\x0B\f\r]+")
+    lrow = pc.list_parent_indices(lt).to_numpy()
+    mtok, midf = m_idf.flatten().flatten()
+
+    def key(rows, tokens):  # "<mention id>\0<token>"
+        return pc.binary_join_element_wise(pc.cast(pa.array(rows), pa.string()), tokens, "\0")
+
+    hit = pc.index_in(key(g[lrow], lt.flatten()),
+                      value_set=key(pc.list_parent_indices(m_idf), pc.cast(mtok, pa.string())))
+    # one column per token position, zero-padded: adding 0.0 is exact, so
+    # summing column by column is the row-wise left-to-right sum
+    lens = pc.list_value_length(lt).to_numpy()
+    mat = np.zeros((len(lens), int(lens.max())))
+    mat[lrow, np.arange(len(lrow)) - (np.cumsum(lens) - lens)[lrow]] = pc.fill_null(
+        midf.take(hit), 0.0).to_numpy()
+    lex = np.zeros(len(lens))
+    for rep in range(int(n_dup.max())):
+        for column in mat.T:
+            lex += np.where(rep < n_dup, column, 0.0)
+    return lex
+
+
+def _score_partition(batches, k: int):
+    """Steps 5–8 over one partition, which holds all pairs of its mentions."""
+    batches = list(batches)
+    if not batches or not sum(b.num_rows for b in batches):
+        return
+    t = pa.Table.from_batches(batches)
+    col = {name: t.column(name).combine_chunks() for name in t.column_names}
+    arr = lambda name: col[name].to_numpy(zero_copy_only=False)  # noqa: E731
+
+    # L5, with the origin factor applied before the threshold (es_lookup.py:156-187)
+    fuzzy, pexact = fuzzy_pexact_batch(arr("mention_norm"), arr("label_norm"), MIN_FUZZY)
+    aliases = ("MAIN_ALIAS", "SUB_ALIAS")
+    fuzzy_w = fuzzy * np.select([arr("origin") == o for o in aliases],
+                                [ORIGIN_WEIGHTS[o] for o in aliases], ORIGIN_WEIGHTS["LABEL"])
+
+    # L6: adaptive threshold per mention
+    g = _codes(col["mention_norm"])
+    keep = np.flatnonzero(
+        (fuzzy_w >= np.maximum(MIN_FUZZY, _group_max(g, fuzzy_w) - ADAPTIVE_MARGIN)) | pexact)
+    if not len(keep):
+        return
+    m_idf = col["m_idf"].take(np.unique(g, return_index=True)[1])
+    g, fuzzy_w = g[keep], fuzzy_w[keep]
+    kept = {c: col[c].take(keep) for c in ("entity", "label", "label_norm", "pr")}
+    dup = _codes(pa.array(g), kept["entity"], kept["label_norm"])
+    lex = _lex_raw(g, kept["label_norm"], m_idf, np.bincount(dup)[dup])
+
+    # per-entity best label: max of (fuzzy_w, lex_raw, pr, label) (es_lookup.py:148-152)
+    order, rank = _ranked(
+        _codes(pa.array(g), kept["entity"]),
+        pa.table({"f": fuzzy_w, "x": lex, "pr": kept["pr"], "l": kept["label"]}),
+        [("f", "descending"), ("x", "descending"), ("pr", "descending"), ("l", "descending")])
+    best = order[rank == 0]
+    rows, g, lex = keep[best], g[best], lex[best]
+
+    # L7: final score
+    max_lex = _group_max(g, lex)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        lex_term = np.where(max_lex > 0, lex / max_lex, 0.0)
+    score = (fuzzy_w[best] * FUZZY_FACTOR
+             + arr("_lpr")[rows] * PR_FACTOR / _group_max(g, arr("_lpr_den")[rows])
+             + lex_term * LEX_FACTOR)
+
+    # L8: top-K per mention, ties on entity ascending
+    order, rank = _ranked(g, pa.table({"s": score, "e": col["entity"].take(rows)}),
+                          [("s", "descending"), ("e", "ascending")])
+    top = order[rank < k]
+    out = rows[top]
+    yield pa.RecordBatch.from_arrays(
+        [col["mention_norm"].take(out), col["entity"].take(out), col["label"].take(out),
+         pa.array(score[top])],
+        names=["mention_norm", "entity", "best_label", "score"])
 
 
 def lookup(

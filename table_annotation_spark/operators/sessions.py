@@ -23,8 +23,10 @@ SESSION_GAP_MIN = 30
 def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sessions: a new session starts when the gap to the previous
     event exceeds SESSION_GAP_MIN minutes. Emits per-session aggregates."""
+    # fractional epoch seconds, as the oracle's epoch(ts): unix_timestamp
+    # truncates to whole seconds, so a 1,800.5 s gap would not open a session
     e = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "epoch", F.unix_timestamp(F.col("ts").cast("timestamp"))
+        "epoch", F.col("ts").cast("timestamp").cast("double")
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("epoch") - F.lag("epoch").over(w)

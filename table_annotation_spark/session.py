@@ -41,6 +41,18 @@ def _local_dirs() -> str:
     return "/tmp/spark-local"
 
 
+def _driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM (a JVM size such as ``8g``; default 8g),
+    capped at half of physical RAM: local-mode executors share the driver
+    heap, and a heap sized past the host fails late, under memory pressure,
+    instead of at start."""
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g").strip().lower()
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1 << 20}
+    want_mb = float(want[:-1]) * scale[want[-1]] if want[-1] in scale else float(want)
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{int(min(want_mb, ram_mb // 2))}m"
+
+
 def tune_for_input_size(spark: SparkSession, approx_rows: int) -> None:
     """Set runtime confs by input size. AQE's per-shuffle re-optimization
     costs ~0.5-1 s per exchange — a pure win at TB scale, a 6× slowdown on
@@ -252,7 +264,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # broadcast sides are deliberately computed subtrees (small dims
